@@ -249,3 +249,63 @@ def test_update_without_prior_run_fails_cleanly(spark, tmp_path):
     docs = spark.createDataFrame([(1, "Werner Herzog.")], ["doc_id", "text"])
     with pytest.raises(FileNotFoundError, match="run\\(\\) must finish once"):
         pipe.update(docs)
+
+
+def _all_column_hash(df):
+    cols = ", ".join(df.columns)
+    return df.agg(F.expr(f"bit_xor(xxhash64({cols}))"), F.count("*")).first()
+
+
+@pytest.mark.parametrize("include_lemmas,repeat_doc_id", [
+    (False, False), (True, False), (True, True),
+])
+def test_staged_entities_equal_lean_aggregate(spark, tmp_path, include_lemmas,
+                                              repeat_doc_id):
+    """run()'s durable ``extracted`` stage is the flat entity table, and
+    its ``entities`` stage equals entity_aggregate() column for column —
+    also when a doc_id repeats, where doc_freq counts (doc, key) rows."""
+    from textgraphs_spark.operators.extract import ENTITY_SCHEMA
+    from textgraphs_spark.plans.er_pipeline import entity_aggregate
+
+    docs = synth_pages(spark, 60).select(F.xxhash64("url").alias("doc_id"), "text")
+    if repeat_doc_id:
+        first = docs.first()
+        docs = docs.unionByName(
+            spark.createDataFrame([(first["doc_id"], first["text"])], docs.schema)
+        )
+    out = ERPipeline(spark, workdir=str(tmp_path / "wd"),
+                     include_lemmas=include_lemmas).run(docs)
+    lean = entity_aggregate(docs, include_lemmas=include_lemmas)
+
+    staged_hash = _all_column_hash(out["entities"].select(*lean.columns))
+    assert staged_hash[1] > 0
+    assert staged_hash == _all_column_hash(lean)
+    flat = [(f.name, f.dataType) for f in ENTITY_SCHEMA]
+    assert [(f.name, f.dataType) for f in out["extracted"].schema] == flat
+    if repeat_doc_id:
+        assert out["entities"].agg(F.max("doc_freq")).first()[0] >= 2
+
+
+def test_run_refuses_ranked_clusters_workdir(spark, tmp_path):
+    """ranked_clusters(workdir=...) stages nested graph rows as
+    ``extracted``; run() on that workdir must fail loudly, not resume
+    them into an empty clustering."""
+    from textgraphs_spark.plans.er_pipeline import ranked_clusters
+
+    docs = synth_pages(spark, 60).select(F.xxhash64("url").alias("doc_id"), "text")
+    wd = str(tmp_path / "rc")
+    ranked_clusters(spark, docs, workdir=wd, include_lemmas=True).collect()
+    with pytest.raises(ValueError, match="extracted.*fresh workdir"):
+        ERPipeline(spark, workdir=wd, include_lemmas=True).run(docs)
+
+
+def test_ranked_clusters_refuses_run_workdir(spark, tmp_path):
+    """The other direction: run()'s flat ``extracted`` stage has no
+    nested nodes/edges for ranked_clusters to read."""
+    from textgraphs_spark.plans.er_pipeline import ranked_clusters
+
+    docs = synth_pages(spark, 60).select(F.xxhash64("url").alias("doc_id"), "text")
+    wd = str(tmp_path / "run")
+    ERPipeline(spark, workdir=wd, include_lemmas=True).run(docs)
+    with pytest.raises(ValueError, match="extracted.*fresh workdir"):
+        ranked_clusters(spark, docs, workdir=wd, include_lemmas=True)

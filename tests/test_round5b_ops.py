@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from textgraphs_spark.operators.webdata import (
     doremi_mixture,
     leakage_safe_split,
+    leakage_safe_split_select,
     pld_rollup,
     registered_domains,
     revisit_schedule,
@@ -122,6 +123,16 @@ def test_leakage_safe_split_rejects_bad_pcts(spark):
     docs = spark.createDataFrame([(1, "t")], "doc_id long, text string")
     with pytest.raises(ValueError):
         leakage_safe_split(docs, val_pct=60, test_pct=60)
+
+
+def test_leakage_safe_split_rejects_negative_pcts(spark):
+    # val_pct=-10, test_pct=20 sums into range but would empty the val band
+    docs = spark.createDataFrame([(1, "t")], "doc_id long, text string")
+    for val_pct, test_pct in ((-10, 20), (20, -10)):
+        with pytest.raises(ValueError, match=">= 0"):
+            leakage_safe_split(docs, val_pct=val_pct, test_pct=test_pct)
+        with pytest.raises(ValueError, match=">= 0"):
+            leakage_safe_split_select("SELECT 1", val_pct=val_pct, test_pct=test_pct)
 
 
 def _mixture_docs(spark):

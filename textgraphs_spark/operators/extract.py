@@ -243,12 +243,15 @@ def extract_entities(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     *, include_lemmas: bool = False,
 ) -> DataFrame:
-    """Entity-mentions-only extraction — the ER hot path.
+    """Entity-mentions-only extraction — the ER hot path, and the durable
+    ``extracted`` stage of ``ERPipeline.run()``.
 
     Skips per-doc ranking and the nested node/edge/phrase arrays entirely:
-    the clustering job needs only (doc, lemma_key, surface, label, count).
-    Flat schema keeps the Arrow transfer to a handful of primitive columns,
-    ~5x cheaper per document than the full ``extract_graphs`` row.
+    the clustering job needs only (doc, lemma_key, surface, label, count),
+    one row per (doc, key) with ``count`` its mentions in that doc. Flat
+    schema keeps the Arrow transfer (and the stage's parquet) to a handful
+    of primitive columns, ~5x cheaper per document than the full
+    ``extract_graphs`` row.
 
     ``include_lemmas=True`` also emits NOUN/PROPN lemma nodes as
     resolvable mentions — for corpora without named-entity surface forms.

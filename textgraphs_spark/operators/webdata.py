@@ -2821,6 +2821,14 @@ FROM _a
 # leakage-safe train/val/test split
 # ---------------------------------------------------------------------------
 
+def _check_split_pcts(val_pct: int, test_pct: int) -> None:
+    # a negative band would silently empty val or test
+    if val_pct < 0 or test_pct < 0:
+        raise ValueError("val_pct and test_pct must be >= 0")
+    if val_pct + test_pct > 100:
+        raise ValueError("val_pct + test_pct must be within [0, 100]")
+
+
 def leakage_safe_split(
     docs: DataFrame,
     *,
@@ -2849,8 +2857,7 @@ def leakage_safe_split(
     layout, cluster size, retries, and corpus growth (a doc keeps its
     split when new docs arrive). Map-only codegen, zero shuffle.
     """
-    if not 0 <= val_pct + test_pct <= 100:
-        raise ValueError("val_pct + test_pct must be within [0, 100]")
+    _check_split_pcts(val_pct, test_pct)
     key = (
         F.col(group_col).cast("string") if group_col
         else F.md5(F.coalesce(F.col(text_col), F.lit("")))
@@ -2880,6 +2887,7 @@ def leakage_safe_split_select(
 ) -> str:
     """DuckDB twin of ``leakage_safe_split`` — same md5→int64 reduction
     and Lehmer thresholds."""
+    _check_split_pcts(val_pct, test_pct)
     key = group_expr or f"md5(coalesce({text_col}, ''))"
     gid = f"CAST('0x' || substr(md5({key}), 1, 15) AS BIGINT)"
     h = det_hash_sql(gid)

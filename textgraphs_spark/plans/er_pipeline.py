@@ -4,7 +4,7 @@ This is the reference's extraction + entity-linking pipeline
 (reference: textgraphs/doc.py:381-560, kg.py:306-367, 851-1142) re-expressed
 as the north-star record-linkage job:
 
-    extract (mapInPandas, per-doc lemma graphs)
+    extract (mapInPandas, flat (doc, entity) mention rows)
       → distinct entity surface forms          (vocabulary-sized, not corpus-sized)
       → blocking (normalized keys + MinHash-LSH, salted for skew)
       → pairwise scoring (batched JW inside Arrow UDFs)
@@ -18,6 +18,10 @@ to two audit tables under the workdir — ``lineage`` (per stage: rows,
 partitions, max-partition rows, skew ratio, wall seconds) and ``metrics``
 (per stage x partition: row count) — the north rule's "resumable from
 checkpoint with per-partition lineage + metrics".
+
+``run()``'s ``extracted`` stage is the flat ``extract_entities`` table, not
+per-doc lemma graphs: clustering reads nothing else. ``ranked_clusters``
+stages nested graph rows under that name; each refuses the other's workdir.
 """
 
 from __future__ import annotations
@@ -31,9 +35,27 @@ from pyspark.sql import functions as F
 from ..operators import blocking as B
 from ..operators import components as C
 from ..operators import scoring as S
-from ..operators.extract import extract_entities, extract_graphs, mentions_table
+from ..operators.extract import (
+    ENTITY_SCHEMA, EXTRACT_SCHEMA, corpus_edges, extract_entities, extract_graphs,
+    nodes_table,
+)
 from ..sources import tables as TBL
 from .staged import StagedPipeline
+
+
+def _aggregate_entities(rows: DataFrame) -> DataFrame:
+    """(doc, node_key, surface, label, count) rows, one per (doc, key)
+    → the entity aggregate: mention_count sums the per-doc counts,
+    doc_freq counts the (doc, key) rows."""
+    return rows.groupBy(F.col("node_key").alias("entity_key")).agg(
+        # min, not first: the canonical surface of a key must be
+        # deterministic across partitionings (and reproducible by the
+        # SQL oracle) — first() depends on shuffle order
+        F.min("surface").alias("surface"),
+        F.min("label").alias("label"),
+        F.sum("count").alias("mention_count"),
+        F.count("*").alias("doc_freq"),
+    )
 
 
 def entity_aggregate(
@@ -55,13 +77,8 @@ def entity_aggregate(
     whole extraction. Single-consumer callers (diagnostics queries) pass
     ``checkpoint=False`` to stay fully lazy.
     """
-    ents = extract_entities(docs, id_col, text_col, include_lemmas=include_lemmas)
-    agg = ents.groupBy(F.col("node_key").alias("entity_key")).agg(
-        # min: deterministic canonical surface (see ERPipeline.run())
-        F.min("surface").alias("surface"),
-        F.min("label").alias("label"),
-        F.sum("count").alias("mention_count"),
-        F.count("*").alias("doc_freq"),
+    agg = _aggregate_entities(
+        extract_entities(docs, id_col, text_col, include_lemmas=include_lemmas)
     )
     return agg.localCheckpoint() if checkpoint else agg
 
@@ -193,29 +210,28 @@ class ERPipeline(StagedPipeline):
             max_block_size=self.max_block_size,
         )
 
-    def run(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict[str, DataFrame]:
-        extracted = self._stage("extracted", lambda: extract_graphs(docs, id_col, text_col))
-        mentions = mentions_table(extracted)
-
-        # distinct person-entity surface forms; lemma key IS the seed
-        # identity (same key => same node, graph.py:134-137)
-        kind_pred = (
-            (F.col("kind") == "ent")
-            | (F.lit(self.include_lemmas) & (F.col("kind") == "lem") & F.col("pos").isin("NOUN", "PROPN"))
-        )
-        entities = self._stage("entities", lambda: (
-            mentions.filter(kind_pred)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                # min, not first: the canonical surface of a key must be
-                # deterministic across partitionings (and reproducible by
-                # the SQL oracle) — first() depends on shuffle order
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.count("*").alias("mention_count"),
-                F.countDistinct(id_col).alias("doc_freq"),
+    def _extracted_stage(self, build, schema) -> DataFrame:
+        """The ``extracted`` stage, refusing to resume a table of another
+        shape: run() and ranked_clusters() stage different extractions
+        under this name."""
+        df = self._stage("extracted", build)
+        if df.columns != schema.fieldNames():
+            raise ValueError(
+                f"stage {os.path.join(self.workdir, 'extracted')} has columns "
+                f"{df.columns}, expected {schema.fieldNames()}: it was written "
+                "by another entry point or an older version; use a fresh workdir"
             )
-        ))
+        return df
+
+    def run(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict[str, DataFrame]:
+        # distinct entity surface forms; the lemma key IS the seed identity
+        # (same key => same node, graph.py:134-137)
+        extracted = self._extracted_stage(
+            lambda: extract_entities(docs, id_col, text_col,
+                                     include_lemmas=self.include_lemmas),
+            ENTITY_SCHEMA,
+        )
+        entities = self._stage("entities", lambda: _aggregate_entities(extracted))
 
         pairs = self._stage("pairs", lambda: self._blocking_pairs(entities))
 
@@ -357,17 +373,9 @@ class ERPipeline(StagedPipeline):
         old_entities = TBL.read_table(spark, os.path.join(src, "entities"))
         old_assign = TBL.read_table(spark, os.path.join(src, "assignments"))
 
-        new_ents = (
-            extract_entities(new_docs, id_col, text_col,
-                             include_lemmas=self.include_lemmas)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.sum("count").alias("mention_count"),
-                F.count("*").alias("doc_freq"),
-            )
-        )
+        # checkpointed: merged and fresh_keys both read it; extract once
+        new_ents = entity_aggregate(new_docs, id_col, text_col,
+                                    include_lemmas=self.include_lemmas)
         merged = (
             old_entities.unionByName(new_ents)
             .groupBy("entity_key")
@@ -416,6 +424,8 @@ class ERPipeline(StagedPipeline):
         )
         # relabel components with the min member key — identical contract
         # to components_over_keys, so update() output == a full-batch run
+        # while no block exceeds max_block_size. Once salting engages they
+        # can diverge: old-old pairs come from the block's earlier sharding.
         canon = with_comp.groupBy("_comp").agg(F.min("entity_key").alias("cluster_id"))
         assignments = (
             with_comp.join(canon, "_comp")
@@ -474,13 +484,14 @@ def ranked_clusters(
     """Clusters + per-cluster PageRank ranking, extraction-shape chosen
     by whether a ``workdir`` exists:
 
-    * **staged** (``workdir`` set) — the corpus is scanned ONCE: the full
-      graph extraction materializes as the pipeline's ``extracted``
-      checkpoint, and BOTH consumers (the entity aggregate feeding
-      blocking→scoring→CC, and the lemma-edge table feeding PageRank)
-      read that parquet back. The right shape at 10^12 docs, where
-      re-reading the corpus is the dominant cost — and a resumed run
-      re-reads the stage instead of re-extracting.
+    * **staged** (``workdir`` set) — the corpus is scanned ONCE: the
+      graph extraction, with only its nested ``nodes`` and ``edges``
+      filled, materializes as the ``extracted`` checkpoint, and BOTH
+      consumers (the entity aggregate feeding blocking→scoring→CC, and
+      the lemma-edge table feeding PageRank) read that parquet back. The
+      right shape at 10^12 docs, where re-reading the corpus is the
+      dominant cost. A resumed run re-reads the stage; a workdir holding
+      ``run()``'s flat ``extracted`` stage raises ``ValueError``.
     * **one-shot** (no workdir) — two lazy passes: the cheap flat entity
       extraction for clustering plus an edges-only graph extraction for
       ranking. Measured ~2x cheaper than materializing the nested graph
@@ -491,39 +502,26 @@ def ranked_clusters(
     aggregate from per-doc graph nodes equals ``extract_entities``'s —
     one row per (doc, key) with the same surface/label/count fields.
     """
-    from ..operators.extract import extract_graphs, nodes_table
-
     pipe = ERPipeline(spark, workdir, include_lemmas=include_lemmas)
     if workdir:
-        extracted = pipe._stage(
-            "extracted",
+        extracted = pipe._extracted_stage(
             lambda: extract_graphs(docs, id_col, text_col, parts=("nodes", "edges")),
+            EXTRACT_SCHEMA,
         )
         kind_pred = (
             (F.col("kind") == "ent")
             | (F.lit(include_lemmas) & (F.col("kind") == "lem")
                & F.col("pos").isin("NOUN", "PROPN"))
         )
-        entities = (
-            nodes_table(extracted)
-            .filter(kind_pred)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.sum("count").alias("mention_count"),
-                F.count("*").alias("doc_freq"),
-            )
-            .localCheckpoint()
-        )
+        entities = _aggregate_entities(
+            nodes_table(extracted).filter(kind_pred)
+        ).localCheckpoint()
         assignments = pipe.run_lean(docs, entities=entities)
         edges_src = extracted
         pipe.write_lineage()
     else:
         assignments = pipe.run_lean(docs)
         edges_src = extract_graphs(docs, id_col, text_col, parts=("edges",))
-    from ..operators.extract import corpus_edges
-
     edges = corpus_edges(edges_src).select(
         F.col("src_key").alias("src"), F.col("dst_key").alias("dst"),
         F.col("count").alias("weight"),

@@ -15,6 +15,8 @@ Design points:
   batch and incremental CLI paths use — streaming adds arrival handling,
   never a second clustering implementation (the stream==batch pytest pins
   final assignments bit-equal to a one-shot batch run over the union).
+  That equality holds only while no block exceeds ``max_block_size``:
+  once salting engages, ``update()`` can diverge from the one-shot run.
 * **Snapshot-commit folding (Iceberg semantics on the parquet seam).**
   ``foreachBatch`` replays micro-batches after failures (at-least-once
   per epoch) and ``update()`` is not idempotent — re-folding would
